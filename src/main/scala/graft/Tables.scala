@@ -45,12 +45,12 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     parquetMemoized(spark, s"$sfDir/$name.parquet")
 
-  /** Schema-memoized parquet read of any path — r16: shared with
-    * [[graft.catalog.GraftDatabase.read]], whose per-call footer
-    * inference job every serving read and every `db.sql()` view
-    * registration was paying. Parquet writes always create fresh
-    * part-file names, so any rewrite changes the listing signature
-    * and re-infers.
+  /** Schema-memoized parquet read of any path. Parquet writes always
+    * create fresh part-file names, so any rewrite changes the listing
+    * signature and re-infers. [[graft.catalog.GraftDatabase.read]] was
+    * measured with this memo and deliberately left un-memoized (r16,
+    * measured negative — see the note on that method): its tables are
+    * mostly fresh scratch paths where the memo never hits.
     */
   private[graft] def parquetMemoized(spark: SparkSession,
       path: String): DataFrame = {

@@ -176,9 +176,17 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
       .write.mode(SaveMode.Overwrite).parquet(outPath)
   }
 
-  /** Catalog identifier for a bucketed table of this database. */
+  /** Catalog identifier for a bucketed table of this database: the
+    * session catalog is one flat namespace shared by every database,
+    * and served dbs all sit at `<key>/db` (same `name`), so the
+    * identifier carries a short hash of the full path — otherwise one
+    * db's [[writeBucketed]] re-points another's table and the first
+    * db silently reads the second's data. */
+  private lazy val identTag: String =
+    GraftDatabase.shortHash(new Path(path).toString)
+
   private def bucketedIdent(table: String): String =
-    s"graft_${name}_$table".replaceAll("[^A-Za-z0-9_]", "_")
+    s"graft_${name}_${identTag}_$table".replaceAll("[^A-Za-z0-9_]", "_")
 
   /** Write a table hash-bucketed (and sorted) by `bucketCol`:
     * repeated joins/aggregations on that key then read the
@@ -927,4 +935,10 @@ class GraftDatabase(val spark: SparkSession, val path: String) {
 object GraftDatabase {
   def apply(spark: SparkSession, path: String): GraftDatabase =
     new GraftDatabase(spark, path)
+
+  /** 6-byte MD5 of `s`, hex: a filesystem- and identifier-safe tag. */
+  private[graft] def shortHash(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8"))
+      .take(6).map("%02x".format(_)).mkString
 }

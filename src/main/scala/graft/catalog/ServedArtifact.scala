@@ -3,8 +3,9 @@ package graft.catalog
 import org.apache.spark.sql.SparkSession
 
 /** Build-once/serve-many scratch artifact database, shared by every
-  * served-model path (C30/C31 LM models, the C36b quality gate, the
-  * B32 events rollup). One copy of the protocol the pattern's history
+  * served path (C30/C31 LM models, the C36b quality gate, the B32
+  * events rollup, the E11 text index, the H8 bucketed join layout and
+  * the C40c split artifacts). One copy of the protocol the pattern's history
   * demanded: key on the FULL source path (basename + path-MD5 — two
   * same-named corpora must never share an artifact, the late-r8
   * review fix), re-check the file-listing signature on EVERY
@@ -38,9 +39,7 @@ object ServedArtifact {
     val p = new org.apache.hadoop.fs.Path(dir)
     val ident =
       if (keyExtra.isEmpty) p.toString else s"${p.toString}|$keyExtra"
-    p.getName + "_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(ident.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
+    p.getName + "_" + GraftDatabase.shortHash(ident)
   }
 
   /** The served database for (`prefix`, `dir`, `keyExtra`), building
@@ -54,16 +53,8 @@ object ServedArtifact {
   def db(spark: SparkSession, prefix: String, dir: String,
       sigSource: String, extraSig: String = "", keyExtra: String = "")(
       build: GraftDatabase => Unit): GraftDatabase = {
-    val key = s"${prefix}_${keyOf(dir, keyExtra)}"
-    val d = GraftDatabase(spark,
-      s"${graft.operators.CsvQueries.scratchRoot}/$key/db")
-    // Unlistable source = LOUD error, not a "missing" sentinel: a
-    // served artifact's corpus must be listable, and treating an IO
-    // hiccup as staleness would kick off a spurious full rebuild on
-    // the serving path mid-incident (r13 review).
-    val listing = graft.sources.ParquetStats.listingSig(spark, sigSource)
-      .getOrElse(throw new IllegalStateException(
-        s"served-artifact source not listable: $sigSource"))
+    val (key, d) = dbAt(spark, prefix, dir, keyExtra)
+    val listing = listingOf(spark, sigSource)
     val sig = if (extraSig.isEmpty) listing else s"$listing#$extraSig"
     if (ready.get(key) != sig) {
       locks.computeIfAbsent(key, _ => new Object()).synchronized {
@@ -97,6 +88,50 @@ object ServedArtifact {
     }
     d
   }
+
+  /** Rebuild the served database for (`prefix`, `dir`, `keyExtra`)
+    * unconditionally, under the same JVM and FS build locks as [[db]],
+    * and mark it fresh for this process — for a caller whose timed
+    * work IS the build (the `text_index_build` row). The on-disk
+    * sidecar is deleted before the build and not rewritten: writing
+    * it is a Spark job the build row must not pay, and a deleted
+    * sidecar (with the in-process mark cleared first) means an
+    * interrupted rebuild can never be served as fresh. Another process
+    * re-attaching later rebuilds once.
+    */
+  def rebuild(spark: SparkSession, prefix: String, dir: String,
+      sigSource: String, keyExtra: String = "")(
+      build: GraftDatabase => Unit): GraftDatabase = {
+    val (key, d) = dbAt(spark, prefix, dir, keyExtra)
+    val sig = listingOf(spark, sigSource)
+    locks.computeIfAbsent(key, _ => new Object()).synchronized {
+      if (ready.remove(key) != sig) spark.catalog.refreshByPath(sigSource)
+      withBuildLock(spark, d) {
+        val sidecar = new org.apache.hadoop.fs.Path(d.tablePath("artifact_sig"))
+        sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(sidecar, true)
+        build(d)
+      }
+      ready.put(key, sig)
+    }
+    d
+  }
+
+  private def dbAt(spark: SparkSession, prefix: String, dir: String,
+      keyExtra: String): (String, GraftDatabase) = {
+    val key = s"${prefix}_${keyOf(dir, keyExtra)}"
+    (key, GraftDatabase(spark,
+      s"${graft.operators.CsvQueries.scratchRoot}/$key/db"))
+  }
+
+  // Unlistable source = LOUD error, not a "missing" sentinel: a
+  // served artifact's corpus must be listable, and treating an IO
+  // hiccup as staleness would kick off a spurious full rebuild on
+  // the serving path mid-incident (r13 review).
+  private def listingOf(spark: SparkSession, sigSource: String): String =
+    graft.sources.ParquetStats.listingSig(spark, sigSource)
+      .getOrElse(throw new IllegalStateException(
+        s"served-artifact source not listable: $sigSource"))
 
   /** Is the on-disk sidecar's signature equal to `sig`? Distinguishes
     * the three cases the old catch-all conflated (r14 ADVICE): a

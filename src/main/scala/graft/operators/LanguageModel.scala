@@ -350,7 +350,7 @@ object LanguageModel {
       expr(s"(pos - 1) div ${width}L").as("stage"))
   }
 
-  // Corpus-model memo (the TextIndex servedIndex pattern): the D9
+  // Corpus-model memo (the shared ServedArtifact lifecycle): the D9
   // artifact is a storage decision, not per-query work — build once
   // per corpus dir into a scratch warehouse; a model from a previous
   // process re-attaches when its sidecar matches the corpus. r9: the

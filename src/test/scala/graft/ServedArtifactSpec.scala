@@ -162,4 +162,30 @@ class ServedArtifactSpec extends AnyFunSuite with SparkTestBase {
     assert(builds.get() == 1, "uncommitted sidecar must trigger a rebuild")
     assert(db.read("t").count() == 1)
   }
+
+  test("a failed rebuild is never served: the next db() call builds again") {
+    val dir = corpusDir("served_failed_rebuild")
+    val builds = new AtomicInteger(0)
+    val key = "trebuild_" + ServedArtifact.keyOf(dir)
+    val dbPath = new Path(
+      s"${graft.operators.CsvQueries.scratchRoot}/$key/db")
+    fsOf(dbPath).delete(dbPath.getParent, true)
+    def serve() = ServedArtifact.db(spark, "trebuild", dir,
+      s"$dir/documents.parquet") { d =>
+      builds.incrementAndGet()
+      d.write(spark.range(1).toDF("x"), "t",
+        org.apache.spark.sql.SaveMode.Overwrite)
+    }
+    serve()
+    assert(builds.get() == 1)
+    // the rebuild dies after its data write, before it could be marked
+    intercept[IllegalStateException](ServedArtifact.rebuild(spark,
+      "trebuild", dir, s"$dir/documents.parquet") { d =>
+      d.write(spark.range(2).toDF("x"), "t",
+        org.apache.spark.sql.SaveMode.Overwrite)
+      throw new IllegalStateException("build died")
+    })
+    assert(serve().read("t").count() == 1, "half rebuild must not be served")
+    assert(builds.get() == 2)
+  }
 }

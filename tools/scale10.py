@@ -223,8 +223,18 @@ def _n_buckets():
                      for root, _, files in os.walk(p) for f in files)
     return int(min(4096, max(4, bytes_ // (32 << 20) + 1)))
 _NB = _n_buckets() if os.path.exists(f"{OUT}/documents.parquet") else 4
-_IDX = f"/root/repo/target/graft_scratch/textindex_scale10_{_NB}/db"
 _PB = f"postings_b{_NB}"
+# The served index sits at textindex_<basename>_<hash of path and
+# bucket count>/db (ServedArtifact.keyOf); find the one holding this
+# bucket count's tables instead of re-deriving the hash. Newest wins
+# if several corpora named scale10 were served.
+def _served_index():
+    scratch = os.path.join(os.path.dirname(OUT), "graft_scratch")
+    found = glob.glob(f"{scratch}/textindex_scale10_*/db/{_PB}_corpus")
+    if not found:
+        return f"{scratch}/textindex_scale10_missing/db"
+    return os.path.dirname(max(found, key=os.path.getmtime))
+_IDX = _served_index()
 SERVED_TWINS = {
     "search_hybrid_rrf_served": ("search_hybrid_rrf", f"""
 WITH st AS (SELECT CAST(SUM(n_docs) AS DOUBLE) n,
